@@ -355,6 +355,7 @@ def bm25_index_write_batch(
     """
     from capital.io import parallelize_narrow
     from capital.llm.text import normalized, tokens
+    from capital.streaming.incremental import _overwrite_partitions
 
     narrow = parallelize_narrow(docs)
     toks = narrow.select(
@@ -366,28 +367,23 @@ def bm25_index_write_batch(
         F.count(F.lit(1)).alias("tf")
     ).localCheckpoint(eager=False)  # consumed twice (tf write + df);
     # lazy — the tf write materializes it (round 16, one job fewer)
-    tf.withColumn("batch_id", F.lit(batch_id)).withColumn(
-        "pbucket", F.pmod(F.xxhash64("token"), F.lit(N_POSTING_BUCKETS))
-    ).write.mode("overwrite").partitionBy("batch_id", "pbucket").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(f"{index_dir}/tf")
+    _overwrite_partitions(
+        tf.withColumn(
+            "pbucket", F.pmod(F.xxhash64("token"), F.lit(N_POSTING_BUCKETS))
+        ),
+        f"{index_dir}/tf",
+        batch_id,
+        partition_cols=("batch_id", "pbucket"),
+    )
     df_part = tf.groupBy("token").agg(F.count(F.lit(1)).alias("dfc"))
-    df_part.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(f"{index_dir}/df")
+    _overwrite_partitions(df_part, f"{index_dir}/df", batch_id)
     stats = narrow.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(tokens(normalized(F.col(text_col)))))
         .cast("long")
         .alias("dl_sum"),
     )
-    stats.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(f"{index_dir}/stats")
+    _overwrite_partitions(stats, f"{index_dir}/stats", batch_id)
 
 
 def write_bm25_index(
@@ -532,7 +528,6 @@ def incremental_bm25_index_run(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ):
     """Grow a stored BM25 index incrementally — index one day's crawl
@@ -547,17 +542,12 @@ def incremental_bm25_index_run(
     documents (the file-stream contract — each file is ingested
     once)."""
 
+    from capital.streaming.incremental import _available_now
+
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         bm25_index_write_batch(batch_df, batch_id, index_dir, id_col, text_col)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
     )

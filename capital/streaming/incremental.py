@@ -10,6 +10,20 @@ Mapping:
 - idempotent ``replace=True`` partition overwrite → checkpointed sink:
   a re-run with the same checkpoint emits nothing new.
 
+Every ``foreachBatch`` runner is one per-batch body on three shared
+primitives:
+
+- :func:`_available_now` — the parquet file-source reader,
+  ``foreachBatch``, ``Trigger.AvailableNow`` and ``start`` scaffold
+  (``incremental_run`` shares only its reader half,
+  :func:`_file_stream`, and keeps a native parquet sink);
+- :func:`_overwrite_partitions` — the one batch-partition writer:
+  stamps ``batch_id`` when asked and always sets
+  ``partitionOverwriteMode=dynamic`` on the writer, so a replayed
+  batch rewrites only its own partitions whatever the session conf;
+- :func:`_prior_batches` — the replay-convergent state read: the
+  state rows of batches ``< N`` only, ``None`` on a first batch.
+
 Scale: the file source lists new files per trigger; with
 ``maxFilesPerTrigger`` the engine admits bounded batches, so a backlog
 (e.g. a month of missed days) drains without a single giant batch.
@@ -47,6 +61,70 @@ def read_prior_state(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
+def _prior_batches(
+    spark: SparkSession, state_dir: str, batch_id: int
+) -> DataFrame | None:
+    """The state rows written by batches before ``batch_id`` — what a
+    batch (or its replay after a crash between sink write and
+    checkpoint commit) scores against, so both read the same prior
+    state. ``None`` on a first batch (:func:`read_prior_state`)."""
+    st = read_prior_state(spark, state_dir)
+    return None if st is None else st.filter(F.col("batch_id") < batch_id)
+
+
+def _overwrite_partitions(
+    df: DataFrame,
+    path: str,
+    batch_id: int | None = None,
+    partition_cols: tuple[str, ...] = ("batch_id",),
+) -> None:
+    """Overwrite the partitions of ``path`` that ``df`` touches, and
+    only those: ``partitionOverwriteMode=dynamic`` is set on the
+    writer, because under Spark's default STATIC session mode an
+    overwrite deletes every other partition — all earlier batches'
+    state or days. Stamps ``batch_id`` first when one is given."""
+    if batch_id is not None:
+        df = df.withColumn("batch_id", F.lit(batch_id))
+    df.write.mode("overwrite").partitionBy(*partition_cols).option(
+        "partitionOverwriteMode", "dynamic"
+    ).parquet(path)
+
+
+def _file_stream(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Streaming parquet file source over ``source_dir``; a
+    ``max_files_per_trigger`` cap splits a backlog into bounded
+    batches."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(source_dir)
+
+
+def _available_now(
+    spark: SparkSession,
+    source_dir: str,
+    schema: StructType,
+    checkpoint_dir: str,
+    write_batch: Callable[[DataFrame, int], None],
+    max_files_per_trigger: int | None = None,
+) -> StreamingQuery:
+    """Start one catch-up pass: every file not yet in the checkpoint
+    goes through ``write_batch(batch_df, batch_id)``, then the query
+    stops. Returns the started query; the caller awaits it."""
+    return (
+        _file_stream(spark, source_dir, schema, max_files_per_trigger)
+        .writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def incremental_run(
     spark: SparkSession,
     source_dir: str,
@@ -54,7 +132,6 @@ def incremental_run(
     transform: Callable[[DataFrame], DataFrame],
     sink_dir: str,
     checkpoint_dir: str,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Run one catch-up pass: new files → transform → parquet sink.
@@ -63,13 +140,10 @@ def incremental_run(
     with the same checkpoint is a no-op for already-seen files — the
     engine's version of the reference's idempotent re-runs.
     """
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.format(fmt).load(source_dir)
-    out = transform(stream)
+    stream = _file_stream(spark, source_dir, schema, max_files_per_trigger)
     return (
-        out.writeStream.format("parquet")
+        transform(stream)
+        .writeStream.format("parquet")
         .option("path", sink_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -85,7 +159,6 @@ def incremental_partition_overwrite(
     sink_dir: str,
     checkpoint_dir: str,
     partition_col: str = "ymd",
-    fmt: str = "parquet",
 ) -> StreamingQuery:
     """Exactly-once-per-partition sink: ``foreachBatch`` + dynamic
     partition overwrite (SURVEY.md §2.9 'Exactly-once per partition').
@@ -99,19 +172,12 @@ def incremental_partition_overwrite(
     """
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df)
-        out.write.mode("overwrite").partitionBy(partition_col).parquet(
-            sink_dir
+        _overwrite_partitions(
+            transform(batch_df), sink_dir, partition_cols=(partition_col,)
         )
 
-    return (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch
     )
 
 
@@ -124,7 +190,6 @@ def incremental_upsert_jdbc(
     table: str,
     keys: list[str],
     checkpoint_dir: str,
-    fmt: str = "parquet",
     options: dict[str, str] | None = None,
 ) -> StreamingQuery:
     """Stream → warehouse with exactly-once *effect*: ``foreachBatch``
@@ -144,17 +209,10 @@ def incremental_upsert_jdbc(
     from capital.io import upsert_jdbc
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = transform(batch_df)
-        upsert_jdbc(out, url, table, keys, options=options)
+        upsert_jdbc(transform(batch_df), url, table, keys, options=options)
 
-    return (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch
     )
 
 
@@ -196,7 +254,6 @@ def incremental_with_dead_letter(
     checkpoint_dir: str,
     ts_col: str = "ts",
     max_age: str = "30 days",
-    fmt: str = "parquet",
 ) -> StreamingQuery:
     """Late-data dead-lettering (SURVEY.md §2.9 'dead-letter
     partition'): rows older than ``max_age`` relative to the batch's
@@ -219,19 +276,11 @@ def incremental_with_dead_letter(
         stamped = batch_df.withColumn("__batch", F.lit(batch_id))
         late = stamped.filter(F.col(ts_col) < F.lit(horizon) - age)
         fresh = stamped.filter(F.col(ts_col) >= F.lit(horizon) - age)
-        late.write.mode("overwrite").partitionBy("__batch").parquet(
-            dead_letter_dir
-        )
-        fresh.write.mode("overwrite").partitionBy("__batch").parquet(sink_dir)
+        for out, path in ((late, dead_letter_dir), (fresh, sink_dir)):
+            _overwrite_partitions(out, path, partition_cols=("__batch",))
 
-    return (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_route)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _route
     )
 
 
@@ -382,7 +431,6 @@ def incremental_psi_run(
     bin_col,
     state_dir: str,
     checkpoint_dir: str,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Incremental PSI drift monitor, state-update half: each
@@ -417,22 +465,22 @@ def incremental_psi_run(
             batch_df.select(b.alias("bin"))
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n_cur"))
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        counts.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(state_dir)
+        _overwrite_partitions(counts, state_dir, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
+    )
+
+
+def _state_histogram(spark: SparkSession, state_dir: str) -> DataFrame:
+    """Fold the ``batch_id``-partitioned histogram state written by
+    :func:`incremental_psi_run` into one current-period histogram."""
     return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        spark.read.parquet(state_dir)
+        .groupBy("bin")
+        .agg(F.sum("n_cur").alias("n_cur"))
     )
 
 
@@ -446,11 +494,9 @@ def psi_state_terms(
     stream-vs-batch equality test pins that."""
     from capital.operators.drift import psi_counts_against_baseline
 
-    state = spark.read.parquet(state_dir)
-    cur_counts = state.groupBy("bin").agg(
-        F.sum("n_cur").alias("n_cur")
+    return psi_counts_against_baseline(
+        _state_histogram(spark, state_dir), baseline
     )
-    return psi_counts_against_baseline(cur_counts, baseline)
 
 
 def ks_state_terms(
@@ -467,11 +513,9 @@ def ks_state_terms(
     (the KS contract); PSI covers unordered categoricals."""
     from capital.operators.drift import ks_counts_against_baseline
 
-    state = spark.read.parquet(state_dir)
-    cur_counts = state.groupBy("bin").agg(
-        F.sum("n_cur").alias("n_cur")
+    return ks_counts_against_baseline(
+        _state_histogram(spark, state_dir), baseline
     )
-    return ks_counts_against_baseline(cur_counts, baseline)
 
 
 def incremental_funnel_run(
@@ -484,7 +528,6 @@ def incremental_funnel_run(
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Incremental ordered-funnel monitor, state-update half (the
@@ -511,22 +554,12 @@ def incremental_funnel_run(
             batch_df.filter(F.col(type_col).isin(steps))
             .select(user_col, type_col, ts_col)
             .dropDuplicates([user_col, type_col, ts_col])
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        compact.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(state_dir)
+        _overwrite_partitions(compact, state_dir, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
     )
 
 
@@ -564,7 +597,6 @@ def incremental_bloom_run(
     id_cols: tuple[str, ...] = ("doc_id",),
     m_bits: int | None = None,
     k: int | None = None,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Incremental membership monitor against a GROWING Bloom index —
@@ -611,47 +643,25 @@ def incremental_bloom_run(
         # (empty dir, schema mismatch, corrupt parquet) propagates
         # via read_prior_state — silently scoring against an empty
         # filter would emit wrong seen_before=false flags, no error.
-        st = read_prior_state(spark, state_dir)
+        st = _prior_batches(spark, state_dir, batch_id)
         if st is not None:
-            prior = (
-                st.filter(F.col("batch_id") < batch_id)
-                .groupBy("word_idx")
-                .agg(F.bit_or("word").alias("word"))
-            )
+            prior = st.groupBy("word_idx").agg(F.bit_or("word").alias("word"))
         else:
             prior = spark.createDataFrame(
                 [], "word_idx bigint, word bigint"
             )
-        flags = (
-            bloom_might_contain(
-                batch_df, prior, key_col, m, kk, "seen_before"
-            )
-            .select(*id_cols, key_col, "seen_before")
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        # Per-writer dynamic mode (scd.py pattern): under Spark's
-        # default STATIC partitionOverwriteMode an overwrite wipes ALL
-        # prior batch partitions — the accumulated Bloom state.
-        flags.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(flags_dir)
+        flags = bloom_might_contain(
+            batch_df, prior, key_col, m, kk, "seen_before"
+        ).select(*id_cols, key_col, "seen_before")
+        _overwrite_partitions(flags, flags_dir, batch_id)
         own = bloom_words(
             batch_df.select(F.col(key_col).alias("__k")), "__k", m, kk
-        ).withColumn("batch_id", F.lit(batch_id))
-        own.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(state_dir)
+        )
+        _overwrite_partitions(own, state_dir, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
     )
 
 
@@ -668,6 +678,20 @@ def bloom_state_words(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
+def _prior_line_index(
+    spark: SparkSession, state_dir: str, batch_id: int
+) -> DataFrame:
+    """The distinct-line index of batches before ``batch_id`` as the
+    ``(__line, __seen)`` history relation ``line_dedup_flags`` takes;
+    empty on a first batch."""
+    st = _prior_batches(spark, state_dir, batch_id)
+    if st is None:
+        return spark.createDataFrame([], "__line string, __seen boolean")
+    return (
+        st.select("__line").distinct().withColumn("__seen", F.lit(True))
+    )
+
+
 def incremental_lines_run(
     spark: SparkSession,
     source_dir: str,
@@ -677,7 +701,6 @@ def incremental_lines_run(
     checkpoint_dir: str,
     text_col: str = "lined_text",
     id_col: str = "doc_id",
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Incremental corpus-wide line dedup against a GROWING stored
@@ -715,18 +738,7 @@ def incremental_lines_run(
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from capital.llm.c4 import line_dedup_flags
 
-        st = read_prior_state(spark, state_dir)
-        if st is not None:
-            prior = (
-                st.filter(F.col("batch_id") < batch_id)
-                .select("__line")
-                .distinct()
-                .withColumn("__seen", F.lit(True))
-            )
-        else:
-            prior = spark.createDataFrame(
-                [], "__line string, __seen boolean"
-            )
+        prior = _prior_line_index(spark, state_dir, batch_id)
         base = batch_df.select(id_col, text_col).localCheckpoint(
             eager=False
         )
@@ -735,10 +747,8 @@ def incremental_lines_run(
         # index as the history relation.
         flags = line_dedup_flags(
             base, id_col=id_col, text_col=text_col, prior=prior
-        ).withColumn("batch_id", F.lit(batch_id))
-        flags.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(flags_dir)
+        )
+        _overwrite_partitions(flags, flags_dir, batch_id)
         own = (
             base.select(
                 F.posexplode(F.split(F.col(text_col), "\n")).alias(
@@ -747,22 +757,12 @@ def incremental_lines_run(
             )
             .select("__line")
             .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        own.write.mode("overwrite").partitionBy("batch_id").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(state_dir)
+        _overwrite_partitions(own, state_dir, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
     )
 
 
@@ -782,7 +782,6 @@ def incremental_kmeans_run(
     checkpoint_dir: str,
     id_cols: tuple[str, ...] = ("vec_id",),
     vec_col: str = "embedding",
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Incremental clustering maintenance against a STORED centroid
@@ -823,13 +822,8 @@ def incremental_kmeans_run(
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
         labeled = assign_cells(batch_df, centroids, vec_col=vec_col)
-        (
-            labeled.select(*id_cols, "cell")
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(assign_dir)
+        _overwrite_partitions(
+            labeled.select(*id_cols, "cell"), assign_dir, batch_id
         )
         q = F.floor(
             F.col("__v").cast("double") * F.lit(1e6) + F.lit(0.5)
@@ -840,25 +834,12 @@ def incremental_kmeans_run(
             )
             .groupBy("cell", "__i")
             .agg(F.sum(q).alias("sum_micro"), F.count(F.lit(1)).alias("n"))
-            .withColumn("batch_id", F.lit(batch_id))
         )
-        (
-            partial.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(state_dir)
-        )
+        _overwrite_partitions(partial, state_dir, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
     )
 
 
@@ -931,10 +912,8 @@ def semdedup_write_batch(
     # propagates via read_prior_state (the Bloom-run contract:
     # silently scoring against an empty store emits wrong keep
     # flags, no error).
-    mem = read_prior_state(spark, members_dir)
-    if mem is not None:
-        prior = mem.filter(F.col("batch_id") < batch_id)
-    else:
+    prior = _prior_batches(spark, members_dir, batch_id)
+    if prior is None:
         prior = spark.createDataFrame(
             [],
             labeled.withColumn("batch_id", F.lit(0)).schema,
@@ -985,15 +964,9 @@ def semdedup_write_batch(
             F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
             "first_hit_id",
         )
-        .withColumn("batch_id", F.lit(batch_id))
     )
-    flags.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(flags_dir)
-    members = labeled.withColumn("batch_id", F.lit(batch_id))
-    members.write.mode("overwrite").partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(members_dir)
+    _overwrite_partitions(flags, flags_dir, batch_id)
+    _overwrite_partitions(labeled, members_dir, batch_id)
 
 
 def incremental_semdedup_run(
@@ -1007,7 +980,6 @@ def incremental_semdedup_run(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Incremental SemDeDup (round 11): keep a growing embedding lake
@@ -1057,16 +1029,9 @@ def incremental_semdedup_run(
             members_dir, flags_dir, threshold, id_col, vec_col,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
     )
 
 
@@ -1090,15 +1055,11 @@ def pack_write_batch(
     durable state."""
     from capital.llm.assemble import token_pieces
 
-    st = read_prior_state(spark, state_dir)
-    if st is not None:
-        base = (
-            st.filter(F.col("batch_id") < batch_id)
-            .groupBy(partition_col)
-            .agg(F.sum("n_ids").cast("long").alias("base"))
-        )
-    else:  # PATH_NOT_FOUND: first batch
-        base = None
+    st = _prior_batches(spark, state_dir, batch_id)
+    base = None if st is None else (
+        st.groupBy(partition_col)
+        .agg(F.sum("n_ids").cast("long").alias("base"))
+    )
     pieces = token_pieces(
         batch_df,
         seq_len,
@@ -1107,19 +1068,11 @@ def pack_write_batch(
         order_col=order_col,
         base_offsets=base,
     )
-    pieces.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(pieces_dir)
+    _overwrite_partitions(pieces, pieces_dir, batch_id)
     state = batch_df.groupBy(partition_col).agg(
         F.sum(F.size(F.col(ids_col))).cast("long").alias("n_ids")
     )
-    state.withColumn("batch_id", F.lit(batch_id)).write.mode(
-        "overwrite"
-    ).partitionBy("batch_id").option(
-        "partitionOverwriteMode", "dynamic"
-    ).parquet(state_dir)
+    _overwrite_partitions(state, state_dir, batch_id)
 
 
 def incremental_pack_run(
@@ -1133,7 +1086,6 @@ def incremental_pack_run(
     ids_col: str = "token_ids",
     partition_col: str = "source",
     order_col: str = "doc_id",
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Incremental id-level sequence packing (round 11): pack a
@@ -1167,16 +1119,9 @@ def incremental_pack_run(
             ids_col, partition_col, order_col,
         )
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
     )
 
 
@@ -1191,7 +1136,6 @@ def incremental_curation_run(
     shingles_state_dir: str,
     flags_dir: str,
     checkpoint_dir: str,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> StreamingQuery:
     """Streaming twin of the MODERN curation funnel
@@ -1274,21 +1218,10 @@ def incremental_curation_run(
         ).localCheckpoint(eager=False)
 
         # --- line dedup vs the growing line index ---------------------
-        st = read_prior_state(spark, lines_state_dir)
-        if st is not None:
-            prior = (
-                st.filter(F.col("batch_id") < batch_id)
-                .select("__line")
-                .distinct()
-                .withColumn("__seen", F.lit(True))
-            )
-        else:
-            prior = spark.createDataFrame(
-                [], "__line string, __seen boolean"
-            )
         ld = line_dedup_flags(
             c3.select("doc_id", "text"), text_col="text",
-            prior=prior, with_text=True,
+            prior=_prior_line_index(spark, lines_state_dir, batch_id),
+            with_text=True,
         )
         c4d = c3.select("doc_id", "lang", "source").join(
             ld.select(
@@ -1297,13 +1230,9 @@ def incremental_curation_run(
             ),
             "doc_id",
         ).localCheckpoint(eager=False)
-        own_lines = (
-            c3.select(
-                F.explode(F.split("text", "\n")).alias("__line")
-            )
-            .distinct()
-            .withColumn("batch_id", F.lit(batch_id))
-        )
+        own_lines = c3.select(
+            F.explode(F.split("text", "\n")).alias("__line")
+        ).distinct()
 
         # --- near-dup dedup vs the growing band+shingle state ---------
         mh = dict(V2_MH)
@@ -1319,8 +1248,8 @@ def incremental_curation_run(
             sigs, bands=mh["bands"],
             rows_per_band=mh["rows_per_band"],
         )
-        prior_bands = read_prior_state(spark, bands_state_dir)
-        prior_sh = read_prior_state(spark, shingles_state_dir)
+        prior_bands = _prior_batches(spark, bands_state_dir, batch_id)
+        prior_sh = _prior_batches(spark, shingles_state_dir, batch_id)
         hist_hits = None
         # BOTH state tables must exist to probe history: a replay of
         # a partially-failed first batch (bands written, shingles
@@ -1328,10 +1257,6 @@ def incremental_curation_run(
         # its batch_id<0 filter reads empty state anyway (round-16
         # review).
         if prior_bands is not None and prior_sh is not None:
-            prior_bands = prior_bands.filter(
-                F.col("batch_id") < batch_id
-            )
-            prior_sh = prior_sh.filter(F.col("batch_id") < batch_id)
             cand = (
                 bkeys.join(
                     prior_bands.select(
@@ -1401,35 +1326,21 @@ def incremental_curation_run(
             "doc_id", "lang", "source", "n_lines", "n_removed_lines",
             "n_tokens", "n_removed_tokens",
             F.md5("scrubbed_text").alias("scrubbed_md5"),
-        ).withColumn("batch_id", F.lit(batch_id))
+        )
+        # ``final`` MUST be written first. Its write materializes the
+        # lazy c3, c4d and sh checkpoints, whose lineage reads the
+        # lines, bands and shingles state dirs; written after any of
+        # those dirs, a checkpoint fill-in would recompute against
+        # this batch's own state rows and silently change the output.
         for df_out, path in (
             (final, flags_dir),
             (own_lines, lines_state_dir),
-            (
-                bkeys.select("doc_id", "band_key").withColumn(
-                    "batch_id", F.lit(batch_id)
-                ),
-                bands_state_dir,
-            ),
-            (
-                sh.withColumn("batch_id", F.lit(batch_id)),
-                shingles_state_dir,
-            ),
+            (bkeys.select("doc_id", "band_key"), bands_state_dir),
+            (sh, shingles_state_dir),
         ):
-            df_out.write.mode("overwrite").partitionBy(
-                "batch_id"
-            ).option(
-                "partitionOverwriteMode", "dynamic"
-            ).parquet(path)
+            _overwrite_partitions(df_out, path, batch_id)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        reader.format(fmt)
-        .load(source_dir)
-        .writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _available_now(
+        spark, source_dir, schema, checkpoint_dir, _write_batch,
+        max_files_per_trigger,
     )

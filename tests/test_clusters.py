@@ -57,6 +57,22 @@ def test_summary_and_survivor_corpus(spark):
     assert survivors == [1, 7]
 
 
+def test_survivor_corpus_drops_null_ids(spark):
+    """A NULL-id row is not a corpus document: the drop-set anti-join
+    must not let it through (the old keeper semi-join dropped it)."""
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    docs = spark.createDataFrame(
+        [(1, "a"), (2, "a"), (3, "b"), (None, "c")],
+        "doc_id long, text string",
+    )
+    comps = connected_components(pairs, docs.select("doc_id"))
+    survivors = sorted(
+        (r.doc_id, r.text)
+        for r in deduplicated_corpus(docs, comps).collect()
+    )
+    assert survivors == [(1, "a"), (3, "b")]
+
+
 def test_incremental_probe_flags_only_history_collisions(spark):
     from capital.llm.dedup import (
         band_keys,

@@ -309,7 +309,7 @@ def test_streaming_incremental_cdc_against_stored_index(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     flags = {r.doc_id: r for r in spark.read.parquet(flags_dir).collect()}
     # The shifted copy shares most chunks with history (CDC shift

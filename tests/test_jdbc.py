@@ -202,7 +202,7 @@ def test_streaming_upsert_jdbc_replay_converges(spark, derby_url, sf_dir, tmp_pa
             ["event_id"],
             ckpt,
         )
-        q.awaitTermination(180)
+        assert q.awaitTermination(180)
 
     run(str(tmp_path / "ckpt1"))
     back1 = read_jdbc(spark, derby_url, "stream_events")

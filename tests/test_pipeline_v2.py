@@ -202,7 +202,7 @@ def test_incremental_curation_matches_batch(spark, tmp_path):
             checkpoint_dir=dirs["ckpt"],
             max_files_per_trigger=1,
         )
-        q.awaitTermination(600)
+        assert q.awaitTermination(600)
 
     run()
     stream_rows = {

@@ -288,7 +288,7 @@ def test_bm25_incremental_index_grows_and_replays(spark, sf_dir, tmp_path):
     q = incremental_bm25_index_run(
         spark, src, schema, idx, ckpt, max_files_per_trigger=1
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     stored = sorted(map(tuple, bm25_topk_stored(spark, idx).collect()))
     incall = sorted(map(tuple, bm25_topk(d).collect()))

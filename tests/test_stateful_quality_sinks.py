@@ -39,7 +39,7 @@ def test_stateful_running_totals_across_batches(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     # Latest state per user must equal the batch ground truth.
     latest = spark.sql(

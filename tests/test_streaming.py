@@ -14,6 +14,7 @@ from capital.streaming.incremental import (
     dedup_within_watermark,
     incremental_partition_overwrite,
     incremental_run,
+    incremental_with_dead_letter,
     tumbling_counts,
 )
 
@@ -41,19 +42,19 @@ def test_incremental_availablenow_and_checkpoint_idempotency(
     q = incremental_run(
         spark, src, EVENTS, lambda df: df, sink, ckpt
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     first = spark.read.parquet(sink)
     assert first.count() == ev.count()
 
     # Re-run with same checkpoint: bookmark semantics → nothing new.
     q2 = incremental_run(spark, src, EVENTS, lambda df: df, sink, ckpt)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert spark.read.parquet(sink).count() == ev.count()
 
     # New file arrives → only it is processed on the next run.
     ev.limit(10).coalesce(1).write.mode("append").parquet(src)
     q3 = incremental_run(spark, src, EVENTS, lambda df: df, sink, ckpt)
-    q3.awaitTermination(120)
+    assert q3.awaitTermination(120)
     assert spark.read.parquet(sink).count() == ev.count() + 10
 
 
@@ -73,7 +74,7 @@ def test_incremental_partition_overwrite_idempotent_replay(
     q = incremental_partition_overwrite(
         spark, src, EVENTS, stamp, sink, str(tmp_path / "ckpt1")
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     n1 = spark.read.parquet(sink).count()
     assert n1 == ev.count()
 
@@ -82,8 +83,70 @@ def test_incremental_partition_overwrite_idempotent_replay(
     q2 = incremental_partition_overwrite(
         spark, src, EVENTS, stamp, sink, str(tmp_path / "ckpt2")
     )
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert spark.read.parquet(sink).count() == n1
+
+
+def test_batch_partition_writes_survive_static_session_mode(
+    spark, tmp_path
+):
+    """The incremental sinks set dynamic partition overwrite on the
+    writer: under a session left at Spark's default STATIC mode, a
+    second landed day must not delete the first day's partitions."""
+    import datetime as dt
+
+    src = str(tmp_path / "src")
+    silver = str(tmp_path / "silver")
+    fresh = str(tmp_path / "fresh")
+    dlq = str(tmp_path / "dlq")
+
+    def land(rows: list[tuple]) -> None:
+        spark.createDataFrame(rows, EVENTS).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def ts(day: int) -> dt.datetime:
+        return dt.datetime(2024, 1, day, 12, 0)
+
+    def stamp(df):
+        return df.withColumn("ymd", F.date_format("ts", "yyyy-MM-dd"))
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        # Day 1 carries one row 400 days old, dead-lettered in batch 0.
+        days = [
+            [(1, ts(1), 1, "click", 1.0, None),
+             (2, ts(1) - dt.timedelta(days=400), 1, "click", 1.0, None)],
+            [(3, ts(2), 1, "click", 1.0, None)],
+        ]
+        for rows in days:
+            land(rows)
+            q = incremental_partition_overwrite(
+                spark, src, EVENTS, stamp, silver, str(tmp_path / "ck1")
+            )
+            assert q.awaitTermination(120)
+            q = incremental_with_dead_letter(
+                spark, src, EVENTS, fresh, dlq, str(tmp_path / "ck2")
+            )
+            assert q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, saved)
+
+    ymd = {r.ymd: r.n for r in spark.read.parquet(silver)
+           .groupBy(F.col("ymd").cast("string").alias("ymd"))
+           .agg(F.count(F.lit(1)).alias("n")).collect()}
+    assert ymd == {"2022-11-27": 1, "2024-01-01": 1, "2024-01-02": 1}
+
+    def batches(path):
+        return sorted(
+            (r["__batch"], r["event_id"])
+            for r in spark.read.parquet(path).collect()
+        )
+
+    assert batches(fresh) == [(0, 1), (1, 3)]
+    assert batches(dlq) == [(0, 2)]
 
 
 def test_stream_dedup_within_watermark(spark, sf_dir, tmp_path):
@@ -105,7 +168,7 @@ def test_stream_dedup_within_watermark(spark, sf_dir, tmp_path):
         sink,
         ckpt,
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     out = spark.read.parquet(sink)
     assert out.count() == 200  # duplicates dropped
     assert out.select("event_id").distinct().count() == 200
@@ -134,7 +197,7 @@ def test_streaming_bloom_prefilter_matches_batch(spark, sf_dir, tmp_path):
         sink,
         ckpt,
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
     streamed = {tuple(r) for r in spark.read.parquet(sink).collect()}
     batch = {
         tuple(r) for r in bloom_prefilter(ev, members, "user_id", "user_id").collect()
@@ -159,7 +222,7 @@ def test_stream_window_agg_matches_batch(spark, sf_dir, tmp_path):
         sink,
         ckpt,
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     streamed = spark.read.parquet(sink)
     batch = tumbling_counts(ev, "1 hour")
@@ -235,7 +298,7 @@ def test_stream_static_enrich_matches_batch_join(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     got = {tuple(r) for r in spark.sql("SELECT * FROM enriched").collect()}
     want = {
@@ -309,7 +372,7 @@ def test_streaming_incremental_dedup_against_stored_index(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     flags = {r.doc_id: r for r in spark.read.parquet(flags_dir).collect()}
     assert flags[10].is_dup and flags[10].first_hit_id == 1
@@ -353,7 +416,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, tmp_path):
         ).select("user_id", "click_id", "purchase_id")
 
     q = incremental_run(spark, src, EVENTS, split_join, sink, ckpt)
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     streamed = {tuple(r) for r in spark.read.parquet(sink).collect()}
     batch = {tuple(r) for r in split_join(ev).collect()}
@@ -397,7 +460,7 @@ def test_incremental_psi_stream_matches_batch(spark, sf_dir, tmp_path):
         spark, src, EVENTS, F.hour("ts").cast("string"), state, ckpt,
         max_files_per_trigger=1,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     streamed = psi_state_terms(spark, state, baseline)
     period = F.when(F.col("ts") < split, "ref").otherwise("cur")
@@ -450,7 +513,7 @@ def test_incremental_funnel_stream_matches_batch(spark, sf_dir, tmp_path):
     q = incremental_funnel_run(
         spark, src, EVENTS, steps, state, ckpt, max_files_per_trigger=1
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     streamed = funnel_state_conversion(spark, state, steps)
     batch = funnel_conversion(ev, steps)
@@ -504,7 +567,7 @@ def test_incremental_bloom_stream_matches_exact_prior_membership(
             spark, src, schema, "key", state, flags_dir, ck,
             id_cols=("doc_id",), max_files_per_trigger=1,
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run(ckpt)
     flags = {
@@ -588,7 +651,7 @@ def test_incremental_ks_stream_matches_batch(spark, sf_dir, tmp_path):
     q = incremental_psi_run(
         spark, src, EVENTS, hour_bin, state, ckpt, max_files_per_trigger=1
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     streamed = ks_state_terms(spark, state, baseline)
     period = F.when(F.col("ts") < split, "ref").otherwise("cur")
@@ -644,7 +707,7 @@ def test_incremental_kmeans_stream_matches_batch(spark, sf_dir, tmp_path):
         spark, src, schema, cents, assign, state, ckpt,
         max_files_per_trigger=1,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     streamed = {
         r.vec_id: r.cell
@@ -705,7 +768,7 @@ def test_incremental_semdedup_stream_matches_batch(spark, sf_dir, tmp_path):
         spark, src, schema, cents, members, flags_dir, ckpt,
         threshold=0.35, max_files_per_trigger=1,
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     streamed = {
         r.vec_id: (r.cell, r.is_kept)
@@ -788,7 +851,7 @@ def test_incremental_pack_stream_matches_batch(spark, tmp_path):
         spark, src, df.schema, 4, pieces_dir, state, ckpt,
         max_files_per_trigger=1,
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     def chunkmap(out):
         return {
@@ -891,7 +954,7 @@ def test_incremental_lines_stream_matches_batch_and_replays(
             spark, src, schema, state, flags_dir, ck,
             max_files_per_trigger=1,
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
 
     run(ckpt)
     stream_flags = {

@@ -40,7 +40,7 @@ def test_tws_running_stats_across_batches(spark, sf_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     latest = spark.sql(
         """

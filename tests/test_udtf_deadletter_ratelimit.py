@@ -51,7 +51,7 @@ def test_dead_letter_routing(spark, sf_dir, tmp_path):
         spark, src, EVENTS, sink, dlq, str(tmp_path / "ckpt"),
         max_age="60 days",
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     assert spark.read.parquet(sink).count() == ev.count()
     assert spark.read.parquet(dlq).count() == 5
 
@@ -61,7 +61,7 @@ def test_dead_letter_routing(spark, sf_dir, tmp_path):
         spark, src, EVENTS, sink, dlq, str(tmp_path / "ckpt2"),
         max_age="60 days",
     )
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert spark.read.parquet(sink).count() == ev.count()
     assert spark.read.parquet(dlq).count() == 5
 
